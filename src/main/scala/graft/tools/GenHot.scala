@@ -87,24 +87,9 @@ object GenHot {
 
   def main(args: Array[String]): Unit = {
     val dst = args.headOption.getOrElse("/root/repo/hotdata")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def wr(df: DataFrame, t: String): Unit = {
-      val tmp = s"$dst/_tmp_$t"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val dir = new java.io.File(tmp)
-      val part = dir.listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(s"$dst/$t.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dir.listFiles().foreach(_.delete()); dir.delete()
-    }
-    wr(hotDocuments(spark).orderBy("doc_id"), "documents")
-    wr(hotEmbeddings(spark).orderBy("vec_id"), "embeddings")
+    val spark = graft.util.Sessions.local(graft.util.Sessions.cores)
+    SingleFile.write(hotDocuments(spark).orderBy("doc_id"), dst, "documents")
+    SingleFile.write(hotEmbeddings(spark).orderBy("vec_id"), dst, "embeddings")
     println(s"wrote hot corpus: $dst  ($NDocs docs / $NDocs vectors, " +
       s"planted clique ids [$PlantLo, $PlantHi))")
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator for the sf1 soak (VERDICT r10 #3):
@@ -21,27 +21,10 @@ object GenScale {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/root/repo/target/testdata/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local(graft.util.Sessions.cores)
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
-    // single FILE per table (the driver's layout — tools/check.py's
-    // DuckDB views read '<dir>/<t>.parquet' as one file, not a glob)
-    def wr(df: DataFrame, t: String): Unit = {
-      val tmp = s"$dst/_tmp_$t"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val dir = new java.io.File(tmp)
-      val part = dir.listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(s"$dst/$t.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dir.listFiles().foreach(_.delete()); dir.delete()
-    }
+    def wr(df: DataFrame, t: String): Unit = SingleFile.write(df, dst, t)
     def rep(t: String)(f: (DataFrame, Int) => DataFrame): Unit = {
       val base = rd(t)
       wr((0 until copies).map(i => f(base, i)).reduce(_ unionByName _), t)

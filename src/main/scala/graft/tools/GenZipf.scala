@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -306,26 +306,9 @@ object GenZipf {
     // the default
     val vocab = args.collectFirst { case a if a.startsWith("--vocab=") =>
       a.stripPrefix("--vocab=").toInt }.getOrElse(VocabSize)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local(graft.util.Sessions.cores)
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
-    // single FILE per table — the driver's layout (tools/check.py's
-    // DuckDB views read '<dir>/<t>.parquet' as one file)
-    def wr(df: DataFrame, t: String): Unit = {
-      val tmp = s"$dst/_tmp_$t"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val dir = new java.io.File(tmp)
-      val part = dir.listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(s"$dst/$t.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dir.listFiles().foreach(_.delete()); dir.delete()
-    }
+    def wr(df: DataFrame, t: String): Unit = SingleFile.write(df, dst, t)
     wr(zipfDocuments(rd("documents"), vocab).orderBy("doc_id"), "documents")
     if (!docsOnly) {
       wr(zipfEmbeddings(rd("embeddings")).orderBy("vec_id"), "embeddings")

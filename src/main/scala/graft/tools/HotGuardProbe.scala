@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Refusal-latency evidence for the dedup family's hot-block guards
@@ -19,19 +19,13 @@ import org.apache.spark.sql.functions._
   *
   * Usage: tools/run_main.sh graft.tools.HotGuardProbe [dstDir]
   * Output: one line per guard with the measured wall-clock to refusal;
-  * evidence log committed under tools/ per round.
+  * exits 1 if any guard fails to fire.
   */
 object HotGuardProbe {
 
   def main(args: Array[String]): Unit = {
     val dst = args.headOption.getOrElse("/root/repo/target/testdata/hotprobe")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local(graft.util.Sessions.cores)
     import spark.implicits._
 
     val nDocs = 50000L
