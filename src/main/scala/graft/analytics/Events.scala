@@ -157,7 +157,8 @@ object Events {
     * feeding the same (name, value) partial-distinct → count shape.
     * Same rows: map() preserves null values and explode emits them, so
     * the distinct/count semantics are unchanged. Separated (uncached)
-    * so PlanDump can show the single-scan plan.
+    * so `graft.tools.Prof _qp2_exact_build` can show the single-scan
+    * plan.
     */
   private[graft] def approxDistinctExactPlan(spark: SparkSession, sfDir: String): DataFrame = {
     val cols = ApproxDistinctCols

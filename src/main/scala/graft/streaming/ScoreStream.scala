@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.GroupState
+import graft.text.TextOps
+import graft.timeseries.TsQueries
 
 /** Structured Streaming scoring path — the streaming twin of the batch
   * detection pipeline (SURVEY §2.G): events stream in, get bucketed into
@@ -122,45 +125,28 @@ object ScoreStream {
     * The per-window bin histogram is nBins CONDITIONAL sums inside ONE
     * watermarked aggregation (no second bins→PSI agg — the PSI fold is
     * a stateless projection over the wide row), so state is one row per
-    * (window, series), watermark-evicted. Bins empty on BOTH sides
-    * contribute no term — exactly qp7's absent-row semantics, so a
-    * whole-half window reproduces the batch PSI bit for bit.
+    * (window, series), watermark-evicted. Bin column and PSI fold are
+    * batch qp7's own (TsQueries.valueBin / psiFold), so a whole-half
+    * window reproduces the batch PSI bit for bit.
     *
-    * Out-of-range live values: the baseline's [mn, mx] was fixed at
-    * train time, so live points OUTSIDE it are clamped into the edge
-    * bins (greatest/least below) rather than dropped — they still count
-    * toward the PSI mass. The batch twin never sees this case (its
-    * bounds come from the same data it bins), so the clamp is a
-    * deliberate live-only extension: out-of-range drift lands in bins 0
-    * / nBins−1 and inflates those bins' PSI terms, which is the signal
-    * a monitor wants.
+    * The baseline's [mn, mx] was fixed at train time, so the
+    * bin clamp puts live points OUTSIDE it into the edge bins rather
+    * than dropping them — out-of-range drift inflates bins 0 / nBins−1,
+    * which is the signal a monitor wants.
     */
   def driftStream(points: DataFrame, baseline: DataFrame, nBins: Int = 10,
                   windowDur: String = "1 hour",
                   watermark: String = "2 hours"): DataFrame = {
     require(nBins >= 2, s"nBins=$nBins")
-    val sm = 0.5
-    val ev = points.withWatermark("ts", watermark)
+    val binAggs = TsQueries.binCounts("n", nBins)
+    points.withWatermark("ts", watermark)
       .join(broadcast(baseline.select("series", "mn", "mx")), "series")
-      .withColumn("bin", when(col("mx") === col("mn"), 0L).otherwise(
-        greatest(lit(0L), least(
-          floor((col("value") - col("mn")) / (col("mx") - col("mn")) * nBins),
-          lit(nBins - 1L)))))
-    val binAggs = (0 until nBins).map(b =>
-      sum(when(col("bin") === b, 1L).otherwise(0L)).as(s"n$b"))
-    val live = ev.groupBy(window(col("ts"), windowDur), col("series"))
+      .withColumn("bin", TsQueries.valueBin(col("value"), nBins))
+      .groupBy(window(col("ts"), windowDur), col("series"))
       .agg(binAggs.head, binAggs.tail: _*)
-    val joined = live.join(broadcast(baseline), "series")
-    val tot0 = (0 until nBins).map(b => col(s"c$b")).reduce(_ + _)
-    val tot1 = (0 until nBins).map(b => col(s"n$b")).reduce(_ + _)
-    val terms = (0 until nBins).map { b =>
-      val p = (col(s"c$b") + sm) / (tot0 + sm * nBins)
-      val q = (col(s"n$b") + sm) / (tot1 + sm * nBins)
-      when(col(s"c$b") + col(s"n$b") > 0,
-        floor((p - q) * log(p / q) * 1000000d + 0.5d).cast("long")).otherwise(0L)
-    }.reduce(_ + _)
-    joined.select(col("window.start").as("w_start"), col("series"),
-      tot1.as("n_live"), graft.util.Num.r4(terms / 1000000d).as("psi"))
+      .join(broadcast(baseline), "series")
+      .select(col("window.start").as("w_start"), col("series"),
+        TsQueries.binTotal("n", nBins).as("n_live"), TsQueries.psiFold(nBins).as("psi"))
   }
 
   /** Streaming incremental near-dup dedup — the streaming twin of batch
@@ -214,47 +200,15 @@ object ScoreStream {
 
   /** Streaming quality filter — the streaming twin of batch qt10: every
     * arriving document is scored and tagged in flight with the FIRST
-    * failing quality rule (or 'pass'). A document is one stream element,
-    * so all four signals are STATELESS row arithmetic over the token
-    * array (size / array_distinct / per-unique-token counts / stopword
-    * filter) — no explode, no aggregation, no state store; the operator
-    * composes with any downstream windowed sink. The ratio expressions,
-    * r4 quantization and rule cascade are the batch operator's own
-    * (TextOps.qualityVerdict), so verdicts are bit-identical —
-    * StreamingSpec asserts full-corpus parity.
+    * failing quality rule (or 'pass'). A document is one stream element
+    * and batch qt10 IS the row-local TextOps.qualitySignals block over
+    * the documents scan, so the stream runs that same block: no explode,
+    * no aggregation, no state store (StreamingSpec asserts parity).
     */
-  /** The stateless per-row quality block shared by qualityFilterStream
-    * and corpusFunnelStream: appends `toks` (the empty-filtered token
-    * array — downstream shingling reuses it) and `reason` (the batch
-    * qt10 verdict cascade) to the incoming frame. One definition so the
-    * two streaming consumers can never diverge from each other or from
-    * batch TextOps.qualityVerdict.
-    */
-  private def qualitySignals(docs: DataFrame, minTok: Long, minStopRatio: Double,
-                             maxDupFrac: Double, maxTopFrac: Double): DataFrame = {
-    import graft.util.Num
-    val stop = graft.text.TextOps.Stopwords("en")
-    docs
-      .withColumn("toks", filter(split(col("text"), " "), t => t =!= ""))
-      .withColumn("n_tok", size(col("toks")).cast("long"))
-      .withColumn("uniq", array_distinct(col("toks")))
-      .withColumn("n_uniq", size(col("uniq")).cast("long"))
-      .withColumn("top_tf",
-        array_max(expr("transform(uniq, u -> size(filter(toks, x -> x = u)))")).cast("long"))
-      .withColumn("n_stop",
-        size(filter(col("toks"), t => t.isInCollection(stop))).cast("long"))
-      .withColumn("stop_ratio", Num.r4(coalesce(col("n_stop") / col("n_tok"), lit(0.0))))
-      .withColumn("dup_frac",
-        Num.r4(coalesce((col("n_tok") - col("n_uniq")) / col("n_tok"), lit(0.0))))
-      .withColumn("top_frac", Num.r4(coalesce(col("top_tf") / col("n_tok"), lit(0.0))))
-      .withColumn("reason",
-        graft.text.TextOps.qualityVerdict(minTok, minStopRatio, maxDupFrac, maxTopFrac))
-  }
-
   def qualityFilterStream(docs: DataFrame, minTok: Long = 25L,
                           minStopRatio: Double = 0.01, maxDupFrac: Double = 0.65,
                           maxTopFrac: Double = 0.2): DataFrame =
-    qualitySignals(docs, minTok, minStopRatio, maxDupFrac, maxTopFrac)
+    TextOps.qualitySignals(docs, minTok, minStopRatio, maxDupFrac, maxTopFrac)
       .select(col("doc_id"), col("lang"), col("ts"), col("reason"),
         (col("reason") === "pass").as("keep"))
 
@@ -431,33 +385,19 @@ object ScoreStream {
     import graft.timeseries.ModelStore
     require(nBins >= 2, s"nBins=$nBins")
     val baseline = ModelStore.refitBaseline(spark, modelPath)
-    val scored = refitScoreStream(spark, modelPath, feats.withWatermark("ts", watermark))
-      .join(broadcast(baseline.select("series", "mn", "mx")), "series")
-      .withColumn("bin", when(col("mx") === col("mn"), 0L).otherwise(
-        greatest(lit(0L), least(
-          floor((col("y") - col("mn")) / (col("mx") - col("mn")) * nBins),
-          lit(nBins - 1L)))))
-      .withColumn("aes", floor(abs(col("y") - col("p_stale")) * 10000d + 0.5d).cast("long"))
-      .withColumn("aer", floor(abs(col("y") - col("p_refit")) * 10000d + 0.5d).cast("long"))
-    val binAggs = (0 until nBins).map(b =>
-      sum(when(col("bin") === b, 1L).otherwise(0L)).as(s"n$b"))
-    val aggs = binAggs ++ Seq(
+    val aggs = TsQueries.binCounts("n", nBins) ++ Seq(
       count(lit(1)).as("n_live"), count(col("aes")).as("n_eval"),
       sum("aes").as("saes"), sum("aer").as("saer"))
-    val live = scored.groupBy(window(col("ts"), windowDur), col("series"))
+    val psi = TsQueries.psiFold(nBins)
+    refitScoreStream(spark, modelPath, feats.withWatermark("ts", watermark))
+      .join(broadcast(baseline.select("series", "mn", "mx")), "series")
+      .withColumn("bin", TsQueries.valueBin(col("y"), nBins))
+      .withColumn("aes", floor(abs(col("y") - col("p_stale")) * 10000d + 0.5d).cast("long"))
+      .withColumn("aer", floor(abs(col("y") - col("p_refit")) * 10000d + 0.5d).cast("long"))
+      .groupBy(window(col("ts"), windowDur), col("series"))
       .agg(aggs.head, aggs.tail: _*)
-    val joined = live.join(broadcast(baseline), "series")
-    val sm = 0.5
-    val tot0 = (0 until nBins).map(b => col(s"c$b")).reduce(_ + _)
-    val tot1 = (0 until nBins).map(b => col(s"n$b")).reduce(_ + _)
-    val terms = (0 until nBins).map { b =>
-      val p = (col(s"c$b") + sm) / (tot0 + sm * nBins)
-      val q = (col(s"n$b") + sm) / (tot1 + sm * nBins)
-      when(col(s"c$b") + col(s"n$b") > 0,
-        floor((p - q) * log(p / q) * 1000000d + 0.5d).cast("long")).otherwise(0L)
-    }.reduce(_ + _)
-    val psi = graft.util.Num.r4(terms / 1000000d)
-    joined.select(col("window.start").as("w_start"), col("series"),
+      .join(broadcast(baseline), "series")
+      .select(col("window.start").as("w_start"), col("series"),
       psi.as("psi"), when(psi > thr, 1).otherwise(0).as("drifted"),
       col("n_live"), col("n_eval"),
       graft.util.Num.r4(col("saes") / 10000d / col("n_eval")).as("mae_stale"),
@@ -539,6 +479,24 @@ object ScoreStream {
         graft.util.Num.r4(col("s.d2")).as("ad2"), (col("p") + 1).cast("int").as("rnk"))
   }
 
+  /** The in-row IVF probe of ivfServeStream and hybridServeStream:
+    * explodes the `cell` ids of the nProbe packed centroids `cents`
+    * nearest to `av` ((d2, cell) struct order = batch's probe rank).
+    */
+  private def probeCells(nProbe: Int): Column = explode(expr(
+    s"""transform(slice(array_sort(transform(cents, c -> named_struct(
+          'd2', aggregate(zip_with(av, c.cv, (x, y) -> (x - y) * (x - y)),
+                          0.0D, (a, x) -> a + x),
+          'cell', c.cell))), 1, $nProbe), p -> p.cell)""")).as("cell")
+
+  /** The `array_sort` comparator of every serving ranking: field `f`
+    * descending, then id ascending — a TOTAL order, so per-row top-k
+    * pre-trims merge into exactly the global top-k.
+    */
+  private def descThenId(f: String): String =
+    s"(l, r) -> CASE WHEN l.$f > r.$f THEN -1 WHEN l.$f < r.$f THEN 1 " +
+      "WHEN l.id < r.id THEN -1 WHEN l.id > r.id THEN 1 ELSE 0 END"
+
   /** Streaming IVF retrieval over a SAVED index — the celled sibling of
     * [[annStream]]'s flat SQ8 scan and the serving half of qv26's
     * lifecycle: because ModelStore.saveSplitIvfIndex persists a
@@ -569,11 +527,7 @@ object ScoreStream {
     val lists = ModelStore.ivfListsPacked(spark, modelPath)
     queries.withWatermark("ts", watermark)
       .crossJoin(broadcast(cents))
-      .select(col("qid"), col("ts"), col("av"), col("na"), explode(expr(
-        s"""transform(slice(array_sort(transform(cents, c -> named_struct(
-              'd2', aggregate(zip_with(av, c.cv, (x, y) -> (x - y) * (x - y)),
-                              0.0D, (a, x) -> a + x),
-              'cell', c.cell))), 1, $nProbe), p -> p.cell)""")).as("cell"))
+      .select(col("qid"), col("ts"), col("av"), col("na"), probeCells(nProbe))
       .join(lists, "cell")
       .select(col("qid"), col("ts"), expr(
         s"""slice(array_sort(
@@ -582,16 +536,12 @@ object ScoreStream {
                 'cos', aggregate(zip_with(av, element_at(vecs, i+1), (x, y) -> x * y),
                                  0.0D, (a, x) -> a + x) / (na * element_at(nrms, i+1)))),
               e -> e.id != qid),
-              (l, r) -> CASE WHEN l.cos > r.cos THEN -1 WHEN l.cos < r.cos THEN 1
-                             WHEN l.id < r.id THEN -1 WHEN l.id > r.id THEN 1
-                             ELSE 0 END), 1, $k)""").as("entries"))
+              ${descThenId("cos")}), 1, $k)""").as("entries"))
       .groupBy(window(col("ts"), windowDur), col("qid"))
       .agg(collect_list(col("entries")).as("bundles"))
       .withColumn("topk", expr(
         s"""slice(array_sort(flatten(bundles),
-              (l, r) -> CASE WHEN l.cos > r.cos THEN -1 WHEN l.cos < r.cos THEN 1
-                             WHEN l.id < r.id THEN -1 WHEN l.id > r.id THEN 1
-                             ELSE 0 END), 1, $k)"""))
+              ${descThenId("cos")}), 1, $k)"""))
       .select(col("window.start").as("win_start"), col("qid"),
         posexplode(col("topk")).as(Seq("p", "s")))
       .select(col("win_start"), col("qid"), col("s.id").as("vec_id"),
@@ -727,11 +677,7 @@ object ScoreStream {
     val den = wmq
       .filter(col("av").isNotNull)
       .crossJoin(broadcast(cents))
-      .select(col("qid"), col("ts"), col("av"), col("na"), explode(expr(
-        s"""transform(slice(array_sort(transform(cents, c -> named_struct(
-              'd2', aggregate(zip_with(av, c.cv, (x, y) -> (x - y) * (x - y)),
-                              0.0D, (a, x) -> a + x),
-              'cell', c.cell))), 1, $nProbe), p -> p.cell)""")).as("cell"))
+      .select(col("qid"), col("ts"), col("av"), col("na"), probeCells(nProbe))
       .join(lists, "cell")
       // per-cell top-`depth` PRE-TRIM before anything reaches window
       // state: the epilogue's denTop comparator (scd desc, id asc) is a
@@ -748,9 +694,7 @@ object ScoreStream {
                 'scd', aggregate(zip_with(av, element_at(vecs, i+1), (x, y) -> x * y),
                                  0.0D, (a, x) -> a + x) / (na * element_at(nrms, i+1)))),
               e -> e.id != qid),
-              (l, r) -> CASE WHEN l.scd > r.scd THEN -1 WHEN l.scd < r.scd THEN 1
-                             WHEN l.id < r.id THEN -1 WHEN l.id > r.id THEN 1
-                             ELSE 0 END), 1, $depth)""").as("entries"))
+              ${descThenId("scd")}), 1, $depth)""").as("entries"))
     lex.unionByName(den)
       .groupBy(window(col("ts"), windowDur), col("qid"))
       .agg(collect_list(col("entries")).as("bundles"))
@@ -781,13 +725,9 @@ object ScoreStream {
                              ELSE size(lexs) END) - s),
                      CAST(0 AS BIGINT), (a, e) -> a + e.scl),
               'id', element_at(lexs, s + 1).id)),
-            (l, r) -> CASE WHEN l.s > r.s THEN -1 WHEN l.s < r.s THEN 1
-                           WHEN l.id < r.id THEN -1 WHEN l.id > r.id THEN 1
-                           ELSE 0 END), 1, $depth)), lexTop ->
+            ${descThenId("s")}), 1, $depth)), lexTop ->
           element_at(transform(array(slice(array_sort(filter(flat, e -> e.scd IS NOT NULL),
-              (l, r) -> CASE WHEN l.scd > r.scd THEN -1 WHEN l.scd < r.scd THEN 1
-                             WHEN l.id < r.id THEN -1 WHEN l.id > r.id THEN 1
-                             ELSE 0 END), 1, $depth)), denTop ->
+              ${descThenId("scd")}), 1, $depth)), denTop ->
             element_at(transform(array(transform(
                 array_union(transform(lexTop, x -> x.id), transform(denTop, x -> x.id)),
                 d -> named_struct('id', d,
@@ -797,9 +737,7 @@ object ScoreStream {
                 transform(fused, f -> named_struct('id', f.id, 'lr', f.lr, 'vr', f.vr,
                   'rrf', (CASE WHEN f.lr > 0 THEN 1.0D / ($rrfK + f.lr) ELSE 0.0D END) +
                          (CASE WHEN f.vr > 0 THEN 1.0D / ($rrfK + f.vr) ELSE 0.0D END))),
-                (l, r) -> CASE WHEN l.rrf > r.rrf THEN -1 WHEN l.rrf < r.rrf THEN 1
-                               WHEN l.id < r.id THEN -1 WHEN l.id > r.id THEN 1
-                               ELSE 0 END), 1, $k)), 1)), 1)), 1)), 1)), 1)), 1)"""))
+                ${descThenId("rrf")}), 1, $k)), 1)), 1)), 1)), 1)), 1)), 1)"""))
       .select(col("window.start").as("win_start"), col("qid"),
         posexplode(col("top")).as(Seq("p", "s")))
       .select(col("win_start"), col("qid"), col("s.id").as("doc_id"),
@@ -1099,6 +1037,23 @@ object ScoreStream {
   case class CapState(n: Long)
   case class CapVerdict(source: String, docId: Long, nChars: Long, kept: Boolean)
 
+  /** The per-source admission fold of both cap twins: a group's rows in
+    * doc_id order (replays are deterministic), each `eligible` row
+    * admitted while fewer than `cap` have been; the admitted count is
+    * the source's ONE Long of state.
+    */
+  private def admitUnderCap[R](rows: Iterator[R], state: GroupState[CapState], cap: Int)
+                              (docId: R => Long, eligible: R => Boolean): Iterator[(R, Boolean)] = {
+    var n = state.getOption.map(_.n).getOrElse(0L)
+    val out = rows.toVector.sortBy(docId).map { r =>
+      val kept = eligible(r) && n < cap
+      if (kept) n += 1
+      (r, kept)
+    }
+    state.update(CapState(n))
+    out.iterator
+  }
+
   /** Streaming twin of qt21's per-source document cap — ADMISSION
     * CONTROL in flight: each source admits its first `cap` documents
     * and rejects the rest, ONE Long of state per source. The batch
@@ -1109,9 +1064,7 @@ object ScoreStream {
     * when the batch tie-break's rationale holds. StreamingSpec
     * reconciles per-doc verdicts against the SHARED threshold builder
     * itself (kept ⇔ doc_id ≤ cap_thr), so a drift in the batch
-    * rewrite breaks the twin's spec, not just qt21's oracle. Within a
-    * micro-batch rows sort by doc_id, so replays of the same batch are
-    * deterministic.
+    * rewrite breaks the twin's spec, not just qt21's oracle.
     */
   def domainCapStream(docs: org.apache.spark.sql.Dataset[(String, Long, Long)],
                       cap: Int = 20): org.apache.spark.sql.Dataset[CapVerdict] = {
@@ -1122,14 +1075,9 @@ object ScoreStream {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (source: String, rows: Iterator[(String, Long, Long)],
          state: GroupState[CapState]) =>
-          var n = state.getOption.map(_.n).getOrElse(0L)
-          val out = rows.toVector.sortBy(_._2).map { case (_, id, nc) =>
-            val kept = n < cap
-            if (kept) n += 1
-            CapVerdict(source, id, nc, kept)
+          admitUnderCap(rows, state, cap)(_._2, _ => true).map {
+            case ((_, id, nc), kept) => CapVerdict(source, id, nc, kept)
           }
-          state.update(CapState(n))
-          out.iterator
       }
   }
 
@@ -1146,8 +1094,8 @@ object ScoreStream {
     * tagged with its verdict and first failing stage. Composition of
     * the pieces the individual twins already established:
     *
-    *  - quality gate: stateless row arithmetic ([[qualitySignals]],
-    *    bit-identical to batch qt10);
+    *  - quality gate: batch qt10's row-local block
+    *    (TextOps.qualitySignals);
     *  - decontamination probe: the eval-suite 5-gram hash set is BOUNDED
     *    by design (qd12's scale contract — benchmarks are small), so it
     *    rides the plan as a sorted LITERAL array and the probe is one
@@ -1194,7 +1142,7 @@ object ScoreStream {
       array_sort(array_distinct(transform(sequence(0, size(toks) - $n),
         i -> $shHash)))
       ELSE CAST(array() AS ARRAY<BIGINT>) END"""
-    val withCon = qualitySignals(docs, minTok, minStopRatio, maxDupFrac, maxTopFrac)
+    val withCon = TextOps.qualitySignals(docs, minTok, minStopRatio, maxDupFrac, maxTopFrac)
       .withColumn("shs", expr(shExpr))
       .withColumn("ev", typedLit(evalSorted))
       .withColumn("n_hits", expr("graft_sorted_inter(shs, ev)"))
@@ -1219,18 +1167,10 @@ object ScoreStream {
       .groupByKey(_.source)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (source: String, rows: Iterator[FunnelRow], state: GroupState[CapState]) =>
-          var nAdm = state.getOption.map(_.n).getOrElse(0L)
-          val out = rows.toVector.sortBy(_.docId).map { r =>
-            if (r.dKeep) {
-              nAdm += 1
-              val kept = nAdm <= cap
-              FunnelVerdict(source, r.docId, r.nChars, r.qKeep, r.cKeep, r.dKeep,
-                kept, if (kept) "admitted" else "source_cap")
-            } else FunnelVerdict(source, r.docId, r.nChars, r.qKeep, r.cKeep,
-              r.dKeep, finalKeep = false, r.reason)
+          admitUnderCap(rows, state, cap)(_.docId, _.dKeep).map { case (r, kept) =>
+            val reason = if (!r.dKeep) r.reason else if (kept) "admitted" else "source_cap"
+            FunnelVerdict(source, r.docId, r.nChars, r.qKeep, r.cKeep, r.dKeep, kept, reason)
           }
-          state.update(CapState(nAdm))
-          out.iterator
       }
   }
 

@@ -751,10 +751,9 @@ object Dedup {
     val shd = shd60(spark, sfDir, n)
     // rare checkpoints first (keptFrames' discipline, r19): it sits on
     // BOTH sides of the candidate pair join below, and without
-    // materialization the df groupBy + filter join ran twice — the
-    // before-plan (plans/r19/qd18_containment_before.txt) shows the
-    // same HashAggregate/Exchange df chain duplicated at nodes (6-8)
-    // and (19-21).
+    // materialization the df groupBy + filter join ran twice (the
+    // uncheckpointed plan carries the same HashAggregate/Exchange df
+    // chain on both join sides).
     val rare = shd.join(
       shd.groupBy("shh").agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxDf).select("shh"),

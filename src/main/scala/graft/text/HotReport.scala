@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * pays — the session-cached band table / block stats / label counts /
   * cell assignment, one map-side-combined count agg each, filtered to
   * the over-cap tail (|groups| rows, never pairs). The report's cost
-  * IS the guards' probe cost, measured at sf1 size in
-  * tools/hot_guard_refusal_r16.log (0.6–7.3 s).
+  * IS the guards' probe cost (0.6–7.3 s per guard at sf1 when last
+  * measured; re-measure with `graft.tools.Prof`).
   */
 object HotReport {
 

@@ -127,55 +127,69 @@ object TextOps {
       .select(col("doc_id"), (col("i") + 1).as("rnk"), col("h"))
   }
 
-  /** qt9: repetition metrics — repetitious-document quality signals
-    * INSPIRED BY Gopher (Rae et al. 2021 §A1.1), not a reimplementation:
-    * the paper's duplicate n-gram signals are CHARACTER-fraction based
-    * and its top signal is the top n-gram's char share, while these are
-    * OCCURRENCE fractions (dup-token count / tokens, top single token's
-    * occurrence share, dup-3-gram occurrences / 3-gram occurrences) —
-    * so the paper's filter thresholds do NOT transfer verbatim;
-    * calibrate cuts on your own corpus. Filtering on such signals is how
-    * training pipelines drop boilerplate and degenerate pages; each
-    * metric is per-document map/agg work over the shared token/shingle
-    * stages — no cross-document shuffle.
-    */
   /** qt10: composite quality filter — the keep/drop decision a training
-    * pipeline actually ships: fixed-order rules over the shared token
-    * stage, each doc tagged with the FIRST failing rule (or 'pass').
-    * Rules: too_short (under minTok tokens), low_stopword (en docs with
-    * a stopword ratio under minStopRatio — a natural-language-ness
-    * check, lang-gated because the marker list is English), repetitive
-    * (duplicate-token fraction over maxDupFrac), top_token (single most
-    * frequent token over maxTopFrac of the doc). Signals are quantized
-    * (Num.r4) BEFORE the threshold compare so the decision is
-    * bit-deterministic across engines and partitionings. One token-stage
-    * shuffle + a per-doc agg; the reason column makes drop-rate audits a
-    * groupBy away — embarrassingly parallel at 100 TB.
+    * pipeline actually ships: fixed-order rules over the per-document
+    * token signals, each doc tagged with the FIRST failing rule (or
+    * 'pass'). Rules: too_short (under minTok tokens), low_stopword (en
+    * docs with a stopword ratio under minStopRatio — a
+    * natural-language-ness check, lang-gated because the marker list is
+    * English), repetitive (duplicate-token fraction over maxDupFrac),
+    * top_token (single most frequent token over maxTopFrac of the doc).
+    * Signals are quantized (Num.r4) BEFORE the threshold compare so the
+    * decision is bit-deterministic across engines and partitionings.
+    * The operator IS [[qualitySignals]] over the spread documents scan —
+    * the row-local block streaming qualityFilterStream runs too — so
+    * there is no explode and no shuffle beyond the spread; the reason
+    * column makes drop-rate audits a groupBy away.
     */
   def qualityFilter(spark: SparkSession, sfDir: String,
                     minTok: Long = 25L, minStopRatio: Double = 0.01,
-                    maxDupFrac: Double = 0.65, maxTopFrac: Double = 0.2): DataFrame = {
-    val tf = tokens(spark, sfDir).groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-    val per = tf.groupBy("doc_id").agg(
-      sum("tf").as("n_tok"), count(lit(1)).as("n_uniq"), max("tf").as("top_tf"),
-      sum(when(col("tok").isInCollection(Stopwords("en")), col("tf")).otherwise(0L)).as("n_stop"))
-    Tables.documents(spark, sfDir).select("doc_id", "lang")
-      .join(per, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang"),
-        coalesce(col("n_tok"), lit(0L)).as("n_tok"),
-        Num.r4(coalesce(col("n_stop") / col("n_tok"), lit(0.0))).as("stop_ratio"),
-        Num.r4(coalesce((col("n_tok") - col("n_uniq")) / col("n_tok"), lit(0.0))).as("dup_frac"),
-        Num.r4(coalesce(col("top_tf") / col("n_tok"), lit(0.0))).as("top_frac"))
-      .withColumn("reason",
-        qualityVerdict(minTok, minStopRatio, maxDupFrac, maxTopFrac))
+                    maxDupFrac: Double = 0.65, maxTopFrac: Double = 0.2): DataFrame =
+    qualitySignals(Tables.spread(Tables.documents(spark, sfDir), "doc_id"),
+        minTok, minStopRatio, maxDupFrac, maxTopFrac)
       .select(col("doc_id"), col("lang"), col("reason"),
         (col("reason") === "pass").as("keep"))
-  }
+
+  /** The row-local token statistics of a (…, text) frame, behind qt9,
+    * qt10 and their streaming twins: appends `toks` (non-empty
+    * whitespace tokens in order), `n_tok`, `n_uniq`, `top_tf` (0 for an
+    * empty doc) and the r4 `dup_frac` / `top_frac`. n_uniq and top_tf
+    * come from ONE run-length `aggregate` over the sorted tokens —
+    * O(n log n) per doc, not O(n_tok × n_uniq).
+    */
+  private[graft] def tokenStats(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("toks", filter(split(col("text"), " "), t => t =!= ""))
+      .withColumn("n_tok", size(col("toks")).cast("long"))
+      .withColumn("runs", expr("aggregate(sort_array(toks), " +
+        "named_struct('p', CAST(NULL AS STRING), 'r', 0L, 'u', 0L, 'top', 0L), " +
+        "(s, x) -> IF(x = s.p, " +
+        "named_struct('p', x, 'r', s.r + 1, 'u', s.u, 'top', greatest(s.top, s.r + 1)), " +
+        "named_struct('p', x, 'r', 1L, 'u', s.u + 1, 'top', greatest(s.top, 1L))))"))
+      .withColumn("n_uniq", col("runs.u"))
+      .withColumn("top_tf", col("runs.top"))
+      .drop("runs")
+      .withColumn("dup_frac", perTok(col("n_tok") - col("n_uniq")))
+      .withColumn("top_frac", perTok(col("top_tf")))
+
+  /** A count's r4 share of the doc's tokens; 0 for an empty doc (ANSI x/0 raises). */
+  private def perTok(c: Column): Column =
+    Num.r4(when(col("n_tok") > 0, c / col("n_tok")).otherwise(0.0))
+
+  /** qt10's signals on top of [[tokenStats]] — `n_stop`, `stop_ratio`
+    * and the [[qualityVerdict]] `reason` — for qualityFilter and the
+    * streaming qualityFilterStream / corpusFunnelStream alike.
+    */
+  private[graft] def qualitySignals(docs: DataFrame, minTok: Long, minStopRatio: Double,
+                                    maxDupFrac: Double, maxTopFrac: Double): DataFrame =
+    tokenStats(docs)
+      .withColumn("n_stop",
+        size(filter(col("toks"), t => t.isInCollection(Stopwords("en")))).cast("long"))
+      .withColumn("stop_ratio", perTok(col("n_stop")))
+      .withColumn("reason", qualityVerdict(minTok, minStopRatio, maxDupFrac, maxTopFrac))
 
   /** qt10's fixed-order rule cascade over (n_tok, stop_ratio, dup_frac,
-    * top_frac, lang) — ONE definition shared by the batch operator and
-    * streaming.qualityFilterStream so the keep/drop decision can never
-    * diverge between the two.
+    * top_frac, lang).
     */
   private[graft] def qualityVerdict(minTok: Long, minStopRatio: Double,
                                     maxDupFrac: Double, maxTopFrac: Double): Column =
@@ -185,21 +199,27 @@ object TextOps {
       .when(col("top_frac") > maxTopFrac, "top_token")
       .otherwise("pass")
 
+  /** qt9: repetition metrics — repetitious-document quality signals
+    * INSPIRED BY Gopher (Rae et al. 2021 §A1.1), not a reimplementation:
+    * the paper's duplicate n-gram signals are CHARACTER-fraction based
+    * and its top signal is the top n-gram's char share, while these are
+    * OCCURRENCE fractions (dup-token count / tokens, top single token's
+    * occurrence share, dup-3-gram occurrences / 3-gram occurrences) —
+    * so the paper's filter thresholds do NOT transfer verbatim;
+    * calibrate cuts on your own corpus. Filtering on such signals is how
+    * training pipelines drop boilerplate and degenerate pages. The token
+    * metrics are qt10's row-local [[tokenStats]]; only the 3-gram
+    * fraction aggregates (over the shared shingle stage) and joins back.
+    */
   def repetition(spark: SparkSession, sfDir: String): DataFrame = {
-    val tf = tokens(spark, sfDir).groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-    val tokStats = tf.groupBy("doc_id").agg(
-      sum("tf").as("n_tok"), count(lit(1)).as("n_uniq"), max("tf").as("top_tf"))
     val g3 = shingles(spark, sfDir, 3).groupBy("doc_id", "sh").agg(count(lit(1)).as("c"))
     val g3Stats = g3.groupBy("doc_id").agg(
       sum("c").as("n_3g"),
       sum(when(col("c") > 1, col("c")).otherwise(0L)).as("n_3g_dup"))
-    Tables.documents(spark, sfDir).select("doc_id")
-      .join(tokStats, Seq("doc_id"), "left")
+    tokenStats(Tables.spread(Tables.documents(spark, sfDir), "doc_id"))
       .join(g3Stats, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tok"), lit(0L)).as("n_tok"),
-        Num.r4(coalesce((col("n_tok") - col("n_uniq")) / col("n_tok"), lit(0.0))).as("dup_tok_frac"),
-        Num.r4(coalesce(col("top_tf") / col("n_tok"), lit(0.0))).as("top_tok_frac"),
+      .select(col("doc_id"), col("n_tok"),
+        col("dup_frac").as("dup_tok_frac"), col("top_frac").as("top_tok_frac"),
         Num.r4(coalesce(col("n_3g_dup") / col("n_3g"), lit(0.0))).as("dup_3gram_frac"))
   }
 

@@ -1014,8 +1014,8 @@ FROM pows"""
     *
     * Scale shape: one lag pass; BOTH fits are conditional sufficient-
     * statistics aggs in the same two passes (q54's fold discipline —
-    * no per-model scan); the PSI chain is one filled pass + a
-    * |series|×nBins agg; everything joins per series via the
+    * no per-model scan); the PSI chain is one filled pass + one
+    * per-series agg; everything joins per series via the
     * size-aware dimJoin.
     */
   /** q62's cached lag+cut frame: lags straight off the filled spine —
@@ -1068,30 +1068,29 @@ FROM pows"""
     col(s"b0_$c") + col(s"b1_$c") * col("x1") +
       col(s"b2_$c") * col("x2") + col(s"b3_$c") * col("x3")
 
+  /** q62's PSI points: the non-null filled values with their series'
+    * cutA. The cut comes OFF THE CACHED lag frame (distinct over
+    * |series| rows), not the raw cuts subtree — joining `cuts` here
+    * would rebuild the whole lag pass for the PSI branch (PlanSpec
+    * gates this).
+    */
+  private def refitPsiPoints(spark: SparkSession, sfDir: String,
+                             fracA: Double, fracB: Double): DataFrame =
+    TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull)
+      .transform(graft.util.Joins.dimJoin(_,
+        refitLags(spark, sfDir, fracA, fracB).select("series", "cutA").distinct(),
+        Seq("series"), None))
+
   /** q62's drift baseline for the streaming twin: per series the FULL
-    * value range (psiOf bins against global mn/mx — both halves) and
-    * the train-half (t < cutA) bin counts pivoted wide — the
-    * |series|-row artifact the monitor persists and broadcasts
-    * (driftBaseline's shape with the boundary swapped to cutA).
+    * value range and the train-half (t < cutA) bin counts — qp7's
+    * baseline (TsQueries.psiBaseline) with the boundary swapped to cutA.
     */
   private[graft] def refitBaseline(spark: SparkSession, sfDir: String,
                                    fracA: Double = 0.7, fracB: Double = 0.85,
                                    nBins: Int = 10): DataFrame = {
     require(nBins >= 2, s"nBins=$nBins")
-    val wp = Window.partitionBy("series")
-    val cuts = refitLags(spark, sfDir, fracA, fracB)
-      .select("series", "cutA").distinct()
-    val pts = TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull)
-      .transform(graft.util.Joins.dimJoin(_, cuts, Seq("series"), None))
-      .withColumn("mn", min("v_filled").over(wp))
-      .withColumn("mx", max("v_filled").over(wp))
-      .withColumn("bin", when(col("mx") === col("mn"), 0L).otherwise(
-        least(floor((col("v_filled") - col("mn")) / (col("mx") - col("mn")) * nBins),
-          lit(nBins - 1L))))
-    val binAggs = (0 until nBins).map(b =>
-      sum(when(col("bin") === b, 1L).otherwise(0L)).as(s"c$b"))
-    pts.filter(col("t") < col("cutA")).groupBy("series")
-      .agg(max("mn").as("mn"), (max("mx").as("mx") +: binAggs): _*)
+    TsQueries.psiBaseline(refitPsiPoints(spark, sfDir, fracA, fracB),
+      col("t") < col("cutA"), nBins)
   }
 
   def refitTrigger(spark: SparkSession, sfDir: String, fracA: Double = 0.7,
@@ -1118,14 +1117,9 @@ FROM pows"""
       .filter(col("n") > 0 && col("b0_cutA").isNotNull && col("b0_cutB").isNotNull)
     // PSI of the value distribution across the cutA boundary — qp7's
     // formula via the SHARED TsQueries.psiOf chain, boundary swapped
-    // from the midpoint to the cut. The cut comes OFF THE CACHED frame
-    // (distinct over |series| rows), not the raw cuts subtree — joining
-    // `cuts` here would rebuild the whole lag pass for the PSI branch
-    // (PlanSpec gates this)
-    val pts = TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull)
-      .transform(graft.util.Joins.dimJoin(_,
-        withB.select("series", "cutA").distinct(), Seq("series"), None))
-    val psi = TsQueries.psiOf(pts, when(col("t") < col("cutA"), 0).otherwise(1), nBins)
+    // from the midpoint to the cut
+    val psi = TsQueries.psiOf(refitPsiPoints(spark, sfDir, fracA, fracB),
+        col("t") < col("cutA"), nBins)
       .select("series", "psi")
     graft.util.Joins.dimJoin(errs, psi, Seq("series"), None)
       .select(col("series"), col("psi"),

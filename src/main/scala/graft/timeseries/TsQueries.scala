@@ -145,17 +145,22 @@ object TsQueries {
     * retrain; the reference's contaminated-vs-clean comparisons assume
     * stationarity — this is the check). nBins equal-width value bins
     * from the per-series min/max; PSI = Σ_bins (p−q)·ln(p/q) with
-    * Laplace-smoothed shares. Two grouped aggs + a |series|×nBins-row
-    * window — nothing wider than the bin table shuffles twice. Each
-    * bin's term is quantized to the 1e-6 grid before the sum, so the
-    * ≤ nBins-term accumulation is exact-integer and engine-order-free.
+    * Laplace-smoothed shares. One per-series window pass + ONE
+    * per-series aggregation of 2·nBins conditional bin counts — the
+    * PSI is a projection over that wide row. Each bin's term is
+    * quantized to the 1e-6 grid before the sum, so the ≤ nBins-term
+    * accumulation is exact-integer and engine-order-free.
     */
   def qp7Drift(spark: SparkSession, sfDir: String, nBins: Int = 10): DataFrame = {
     require(nBins >= 2, s"nBins=$nBins: need at least 2 bins for a drift measure")
+    psiOf(midSplit(spark, sfDir), col("t") <= col("mid"), nBins)
+  }
+
+  /** qp7's points: non-null filled values with their series' midpoint `mid`. */
+  private def midSplit(spark: SparkSession, sfDir: String): DataFrame = {
     val wp = Window.partitionBy("series")
-    val pts = TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull)
+    TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull)
       .withColumn("mid", floor((min("t").over(wp) + max("t").over(wp)) / 2))
-    psiOf(pts, when(col("t") <= col("mid"), 0).otherwise(1), nBins)
   }
 
   /** The smoothed-PSI chain over a split of per-series points — ONE
@@ -163,54 +168,76 @@ object TsQueries {
     * per-series range, 0.5 Laplace smoothing, 1e-6 scaled-int term
     * sums) shared by qp7 (midpoint split) and q62 (train-cut split) so
     * the two drift measures can never diverge. `pts` carries
-    * (series, v_filled) non-null rows plus whatever `half` reads;
+    * (series, v_filled) non-null rows plus whatever `first` reads;
     * returns (series, n_first, n_second, psi).
     */
-  private[graft] def psiOf(pts0: DataFrame, half: Column, nBins: Int): DataFrame = {
-    val wp = Window.partitionBy("series")
-    val pts = pts0
-      .withColumn("mn", min("v_filled").over(wp))
-      .withColumn("mx", max("v_filled").over(wp))
-      .withColumn("bin", when(col("mx") === col("mn"), 0L).otherwise(
-        least(floor((col("v_filled") - col("mn")) / (col("mx") - col("mn")) * nBins),
-          lit(nBins - 1L))))
-      .withColumn("half", half)
-    val cnt = pts.groupBy("series", "bin").agg(
-      sum(when(col("half") === 0, 1L).otherwise(0L)).as("n0"),
-      sum(when(col("half") === 1, 1L).otherwise(0L)).as("n1"))
-    val sm = lit(0.5)
-    val terms = cnt
-      .withColumn("t0", sum("n0").over(wp))
-      .withColumn("t1", sum("n1").over(wp))
-      .withColumn("p", (col("n0") + sm) / (col("t0") + sm * nBins))
-      .withColumn("q", (col("n1") + sm) / (col("t1") + sm * nBins))
-      .withColumn("termq",
-        floor((col("p") - col("q")) * log(col("p") / col("q")) * 1000000d + 0.5d).cast("long"))
-    terms.groupBy("series").agg(
-      max("t0").as("n_first"), max("t1").as("n_second"),
-      Num.r4(sum("termq") / 1000000d).as("psi"))
+  private[graft] def psiOf(pts: DataFrame, first: Column, nBins: Int): DataFrame = {
+    val aggs = binCounts("c", nBins, first) ++ binCounts("n", nBins, !first)
+    withBins(pts, nBins).groupBy("series").agg(aggs.head, aggs.tail: _*)
+      .select(col("series"), binTotal("c", nBins).as("n_first"),
+        binTotal("n", nBins).as("n_second"), psiFold(nBins).as("psi"))
   }
 
+  /** A value's equi-width bin against the row's `mn`/`mx` (bin 0 when
+    * they are equal), clamped into [0, nBins−1]: a no-op for batch
+    * points, whose bounds come from the data they bin; a LIVE point
+    * outside a saved baseline's range lands in the edge bin.
+    */
+  private[graft] def valueBin(v: Column, nBins: Int): Column =
+    when(col("mx") === col("mn"), 0L).otherwise(
+      greatest(lit(0L), least(
+        floor((v - col("mn")) / (col("mx") - col("mn")) * nBins),
+        lit(nBins - 1L))))
+
+  /** nBins aggregates `<prefix>0..`: per `bin`, the rows where `rows` holds. */
+  private[graft] def binCounts(prefix: String, nBins: Int,
+                               rows: Column = lit(true)): Seq[Column] =
+    (0 until nBins).map(b =>
+      sum(when(rows && col("bin") === b, 1L).otherwise(0L)).as(s"$prefix$b"))
+
+  /** The total count over the `<prefix>0..` bin columns. */
+  private[graft] def binTotal(prefix: String, nBins: Int): Column =
+    (0 until nBins).map(b => col(s"$prefix$b")).reduce(_ + _)
+
+  /** The PSI of a wide row of reference counts `c0..` and live counts
+    * `n0..` — the one fold of qp7, q62 and both streaming monitors. A
+    * bin empty on both sides contributes no term.
+    */
+  private[graft] def psiFold(nBins: Int): Column = {
+    val sm = 0.5
+    val tot0 = binTotal("c", nBins)
+    val tot1 = binTotal("n", nBins)
+    val terms = (0 until nBins).map { b =>
+      val p = (col(s"c$b") + sm) / (tot0 + sm * nBins)
+      val q = (col(s"n$b") + sm) / (tot1 + sm * nBins)
+      when(col(s"c$b") + col(s"n$b") > 0,
+        floor((p - q) * log(p / q) * 1000000d + 0.5d).cast("long")).otherwise(0L)
+    }.reduce(_ + _)
+    Num.r4(terms / 1000000d)
+  }
+
+  /** `pts` with per-series bounds `mn`/`mx` and each point's [[valueBin]]. */
+  private def withBins(pts: DataFrame, nBins: Int): DataFrame = {
+    val wp = Window.partitionBy("series")
+    pts.withColumn("mn", min("v_filled").over(wp))
+      .withColumn("mx", max("v_filled").over(wp))
+      .withColumn("bin", valueBin(col("v_filled"), nBins))
+  }
+
+  /** A PSI baseline — the |series|-row artifact a streaming monitor
+    * broadcasts: per series the bounds over ALL of `pts` and the bin
+    * counts `c0..` of the rows where `train` holds (qp7's and q62's).
+    */
+  private[graft] def psiBaseline(pts: DataFrame, train: Column, nBins: Int): DataFrame =
+    withBins(pts, nBins).filter(train).groupBy("series")
+      .agg(max("mn").as("mn"), (max("mx").as("mx") +: binCounts("c", nBins)): _*)
+
   /** The train-time drift baseline streaming.driftStream monitors
-    * against: per series, qp7's bounds/bins (global mn/mx, same mid
-    * split) with the FIRST half's per-bin counts pivoted wide — the
-    * |series|-row artifact a monitoring job persists and broadcasts.
+    * against: qp7's bounds and mid split, first-half bin counts.
     */
   private[graft] def driftBaseline(spark: SparkSession, sfDir: String,
-                                   nBins: Int = 10): DataFrame = {
-    val wp = Window.partitionBy("series")
-    val pts = TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull)
-      .withColumn("mid", floor((min("t").over(wp) + max("t").over(wp)) / 2))
-      .withColumn("mn", min("v_filled").over(wp))
-      .withColumn("mx", max("v_filled").over(wp))
-      .withColumn("bin", when(col("mx") === col("mn"), 0L).otherwise(
-        least(floor((col("v_filled") - col("mn")) / (col("mx") - col("mn")) * nBins),
-          lit(nBins - 1L))))
-    val binAggs = (0 until nBins).map(b =>
-      sum(when(col("bin") === b, 1L).otherwise(0L)).as(s"c$b"))
-    pts.filter(col("t") <= col("mid")).groupBy("series")
-      .agg(max("mn").as("mn"), (max("mx").as("mx") +: binAggs): _*)
-  }
+                                   nBins: Int = 10): DataFrame =
+    psiBaseline(midSplit(spark, sfDir), col("t") <= col("mid"), nBins)
 
   def q08Patchify(spark: SparkSession, sfDir: String): DataFrame = {
     val p = TsCore.patches(spark, sfDir)

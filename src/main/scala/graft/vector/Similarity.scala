@@ -1210,9 +1210,9 @@ object Similarity {
       bm25PostingsPlan(spark, sfDir)
     }
 
-  /** The raw (uncached) postings build — separated so PlanDump can show
-    * its physical plan, which the cached frame hides behind a
-    * LogicalRDD.
+  /** The raw (uncached) postings build — separated so
+    * `graft.tools.Prof _bm25post_build` can show its physical plan,
+    * which the cached frame hides behind a LogicalRDD.
     */
   private[graft] def bm25PostingsPlan(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = graft.text.TextCore.tokens(spark, sfDir)
@@ -1220,8 +1220,8 @@ object Similarity {
     // and df from `tf` as separate DataFrame subtrees, and because the
     // cached tokens sit behind a LogicalRDD the planner saw three
     // INDEPENDENT agg chains: the (doc_id, tok) aggregation ran three
-    // times (6 Exchanges; plans/r19/_bm25post_build_before.txt). The
-    // checkpoint materializes tf once for its two consumers below.
+    // times (6 Exchanges). The checkpoint materializes tf once for its
+    // two consumers below.
     // dlen rides a per-doc window over the SAME rows instead of an
     // agg + join — window groups are bounded by document length, so
     // (unlike a per-token window) this cannot buffer a stop word's

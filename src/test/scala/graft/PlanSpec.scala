@@ -386,8 +386,8 @@ class PlanSpec extends SparkSuite {
     spark.catalog.clearCache()
     // q62: the lag+cuts frame is session-cached — the conditional fit
     // and error passes read the materialization, so the query plan
-    // derives NO per-series lag window of its own (its two windows are
-    // the PSI chain's mn/mx and bin-total passes over filled)
+    // derives NO per-series lag window of its own (its one window is
+    // the PSI chain's mn/mx pass over filled)
     val p62 = plan(graft.timeseries.Forecast.refitTrigger(spark, Sf01))
     assert(!p62.contains("lag(y"),
       s"q62 must read the cached lag frame, not rebuild it:\n${p62.take(900)}")
@@ -406,6 +406,26 @@ class PlanSpec extends SparkSuite {
     val p17 = plan(graft.vector.Similarity.probeSweep(spark, Sf01))
     assert("AS crank#".r.findAllIn(p17).size == 1,
       s"qv17 must rank probes once:\n${p17.take(900)}")
+  }
+
+  test("qp7/q62 PSI: one per-series aggregation, no (series, bin) agg, no window over bin counts") {
+    spark.catalog.clearCache()
+    val seriesBinAgg = """keys=\[series#\d+, bin#""".r
+    val binCountWindow = """Window \[[^\n]*sum\(""".r
+    val seriesAgg = """HashAggregate\(keys=\[series#\d+\]""".r
+    val p7 = plan(graft.timeseries.TsQueries.qp7Drift(spark, Sf01))
+    val p62 = plan(graft.timeseries.Forecast.refitTrigger(spark, Sf01))
+    for ((k, p) <- Seq("qp7" -> p7, "q62" -> p62)) {
+      assert(seriesBinAgg.findFirstIn(p).isEmpty, s"$k aggregates per (series, bin):\n$p")
+      assert(binCountWindow.findFirstIn(p).isEmpty, s"$k sums bin counts in a window:\n$p")
+      // the bins meet ONE aggregation (partial + final), keyed by series alone
+      val binAggs = p.split("\n").filter(l => l.contains("HashAggregate(") && l.contains("bin#"))
+      assert(binAggs.length == 2 && binAggs.forall(seriesAgg.findFirstIn(_).isDefined),
+        s"$k must count bins in one per-series aggregation:\n$p")
+    }
+    // qp7's ONLY aggregation is the per-series bin-count row (partial + final)
+    assert(seriesAgg.findAllIn(p7).size == 2 && "HashAggregate".r.findAllIn(p7).size == 2,
+      s"qp7 must aggregate once per series:\n$p7")
   }
 
   test("round-10 forecast ops keep their scale shapes (q59/q60)") {

@@ -280,6 +280,45 @@ class TextSpec extends SparkSuite {
     }
   }
 
+  test("token-stats kernel == driver recompute on edge and 100k-token documents") {
+    import spark.implicits._
+    def r4(x: Double) = math.floor(x * 10000 + 0.5) / 10000
+    def want(text: String) = {
+      val toks = text.split(" ").filter(_.nonEmpty)
+      val n = toks.length
+      val tf = toks.groupBy(identity).map(_._2.length)
+      val top = if (n == 0) 0 else tf.max
+      (n.toLong, tf.size.toLong, top.toLong,
+        if (n == 0) 0.0 else r4((n - tf.size).toDouble / n),
+        if (n == 0) 0.0 else r4(top.toDouble / n))
+    }
+    def stats(docs: Seq[(Long, String)]) =
+      TextOps.qualitySignals(docs.toDF("doc_id", "text").withColumn("lang", lit("en")),
+          25L, 0.01, 0.65, 0.2)
+        .select("doc_id", "n_tok", "n_uniq", "top_tf", "dup_frac", "top_frac", "reason")
+        .as[(Long, Long, Long, Long, Double, Double, String)].collect()
+        .map(r => r._1 -> r).toMap
+    val edge = Seq(1L -> "", 2L -> "solo", 3L -> "x x x x x", 4L -> "  a  b   a ",
+      5L -> "b a c a b a")
+    val got = stats(edge)
+    edge.foreach { case (id, text) =>
+      val (_, n, u, top, dup, tp, _) = got(id)
+      assert((n, u, top, dup, tp) === want(text), s"doc $id")
+    }
+    assert(got(1L)._7 === "too_short")
+    // one 100k-token doc drawn from 60k words (~49k distinct): a
+    // per-distinct-token count would be O(n_tok × n_uniq), ~5e9 lambda calls
+    val rnd = new scala.util.Random(42)
+    val big = Seq.fill(100000)(s"w${rnd.nextInt(60000)}").mkString(" ")
+    val t0 = System.nanoTime()
+    val (_, n, u, top, dup, tp, _) = stats(Seq(9L -> big))(9L)
+    val sec = (System.nanoTime() - t0) / 1e9
+    info(f"100k-token doc ($u distinct): $sec%.2f s")
+    assert((n, u, top, dup, tp) === want(big))
+    assert(u > 45000 && u < 55000, s"distinct tokens $u")
+    assert(sec < 60, f"token stats took $sec%.1f s on one 100k-token doc")
+  }
+
   test("qd9 incremental dedup == the cross-split slice of the full LSH pairs") {
     import org.apache.spark.sql.functions._
     val inc = Dedup.incrementalDedup(spark, Sf001)
