@@ -875,37 +875,25 @@ object ScoreStream {
   /** Streaming twin of the BATCH detection scorer, wired to a
     * ModelStore artifact: patch-feature rows stream in (series, win,
     * pos, f0..f8 + event-time ts), each patch is scored against the
-    * SAVED packed memory bank with the same codegen
-    * graft_min_dist2/graft_argmin_dist2 kernels the batch path uses
-    * (one broadcast bank row — a stream-static join, so the stream side
-    * never shuffles before its windowed reduce), and per-(series, win)
-    * max scores emit once the watermark closes the window, flagged
-    * against the saved threshold. Score values are BIT-IDENTICAL to
-    * Detect.pipeline / ModelStore.loadAndScore on the same patches
-    * (StreamingSpec asserts this) — the model trains in batch, scores
-    * in flight.
+    * SAVED packed memory bank by the SoftPatch patch score the batch
+    * path uses (Detect.patchScores — one broadcast bank row, a
+    * stream-static join, so the stream side never shuffles before its
+    * windowed reduce), and per-(series, win) max scores emit once the
+    * watermark closes the window, flagged against the saved threshold
+    * (ModelStore.flagSaved). Only the `window(ts)` grouping is this
+    * twin's own; score values are BIT-IDENTICAL to Detect.pipeline /
+    * ModelStore.loadAndScore on the same patches (StreamingSpec
+    * asserts this) — the model trains in batch, scores in flight.
     */
   def bankScoreStream(spark: SparkSession, modelPath: String,
                       patches: DataFrame, windowDur: String = "1 day",
                       watermark: String = "2 hours"): DataFrame = {
     import graft.timeseries.{Detect, ModelStore}
-    graft.functions.VectorExprs.register(spark)
-    val packed = ModelStore.packedBank(spark, modelPath)
-    val thr = ModelStore.threshold(spark, modelPath)
-    patches
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("series"), col("win"),
-        array(Detect.FeatCols.map(col): _*).as("p"))
-      .crossJoin(broadcast(packed))
-      .withColumn("idx", expr("graft_argmin_dist2(bf, p)"))
-      .withColumn("pscore",
-        sqrt(expr("graft_min_dist2(bf, p)")) * expr("ws[int(idx)]"))
-      .groupBy(window(col("ts"), windowDur), col("series"), col("win"))
-      .agg(max("pscore").as("score"))
-      .crossJoin(broadcast(thr))
-      .select(col("series"), col("win"),
-        graft.util.Num.r4(col("score")).as("score"),
-        when(col("score") > col("threshold"), 1).otherwise(0).as("pred"))
+    ModelStore.flagSaved(spark, modelPath,
+      Detect.patchScores(patches.withWatermark("ts", watermark),
+          ModelStore.packedBank(spark, modelPath), Seq("ts", "series", "win"))
+        .groupBy(window(col("ts"), windowDur), col("series"), col("win"))
+        .agg(max("pscore").as("score")))
   }
 
   case class CusumState(sp: Double, sn: Double)

@@ -147,6 +147,45 @@ object Detect {
           Num.r4(sqrt(form)).as("mdist"))
     }
 
+  private def patchId: Column = concat_ws("#", col("series"), col("win"))
+
+  /** Both bank guards from ONE per-position count job — `(pos, id)` is
+    * unique in the bank, so a position's row count IS its roster count:
+    * the exact packed payload of [[knnRef]] (Σ_pos min(|pos|, maxRef)
+    * × 9 × 8 B) and the number of positions over the cap.
+    */
+  private def rosterGuards(withId: DataFrame, maxRef: Int): (Long, Long) = {
+    val r = withId.groupBy("pos").agg(count(lit(1)).as("c"))
+      .agg(coalesce(sum(least(col("c"), lit(maxRef.toLong))), lit(0L)),
+        count(when(col("c") > maxRef, 1)))
+      .first()
+    (r.getLong(0) * FeatCols.length * 8L, r.getLong(1))
+  }
+
+  /** The capped reference side with the LOUD truncation guard (`over`
+    * positions past the cap, read only when capping): the registered
+    * q11/q12 stay bit-identical to their exact-uncapped DuckDB oracles
+    * ONLY while no position exceeds maxRef windows — if a scale bump
+    * ever trips the cap, a parity break must point HERE, not at the
+    * pairwise logic.
+    */
+  private def cappedRef(withId: DataFrame, maxRef: Int, over: => Long): DataFrame =
+    if (maxRef == Int.MaxValue) withId
+    else {
+      if (over > 0)
+        Console.err.println(
+          s"[graft] pairwiseRef: cap maxRef=$maxRef TRUNCATES $over " +
+            "position(s) — capped result now diverges from the exact " +
+            "pairwise (and its oracle) by design")
+      // the candidate roster is the bank's own (pos, id) set — tiny
+      // relative to the pair stream; rank it, keep the first maxRef
+      val wRef = Window.partitionBy("pos").orderBy("id")
+      val refIds = withId.select("pos", "id").distinct()
+        .withColumn("rr", row_number().over(wRef)).filter(col("rr") <= maxRef)
+        .select("pos", "id")
+      withId.join(refIds, Seq("pos", "id"))
+    }
+
   /** Pairwise distances against a CAPPED reference set: every patch is
     * still scored, but the neighbour-candidate side is truncated to the
     * deterministic first `maxRef` window ids per position BEFORE the
@@ -158,41 +197,24 @@ object Detect {
     * pairwise (DetectSpec asserts bit-equality), so the oracle stays
     * the exact mirror at test scales.
     */
-  /** The capped reference side with the LOUD truncation guard (one tiny
-    * agg on the roster): the registered q11/q12 stay bit-identical to
-    * their exact-uncapped DuckDB oracles ONLY while no position exceeds
-    * maxRef windows — if a scale bump ever trips the cap, a parity
-    * break must point HERE, not at the pairwise logic.
-    */
-  private def cappedRef(withId: DataFrame, maxRef: Int): DataFrame =
-    if (maxRef == Int.MaxValue) withId
-    else {
-      // the candidate roster is the bank's own (pos, id) set — tiny
-      // relative to the pair stream; rank it, keep the first maxRef
-      val wRef = Window.partitionBy("pos").orderBy("id")
-      val roster = withId.select("pos", "id").distinct()
-      val over = roster.groupBy("pos").count()
-        .filter(col("count") > maxRef).count()
-      if (over > 0)
-        Console.err.println(
-          s"[graft] pairwiseRef: cap maxRef=$maxRef TRUNCATES $over " +
-            "position(s) — capped result now diverges from the exact " +
-            "pairwise (and its oracle) by design")
-      val refIds = roster
-        .withColumn("rr", row_number().over(wRef)).filter(col("rr") <= maxRef)
-        .select("pos", "id")
-      withId.join(refIds, Seq("pos", "id"))
-    }
-
   private[graft] def pairwiseRef(bank: DataFrame, maxRef: Int): DataFrame = {
-    val pid = concat_ws("#", col("series"), col("win"))
-    val withId = bank.withColumn("id", pid)
+    val withId = bank.withColumn("id", patchId)
     val a = renamed(withId, "a_")
-    val b = renamed(cappedRef(withId, maxRef), "b_")
+    val b = renamed(cappedRef(withId, maxRef, rosterGuards(withId, maxRef)._2), "b_")
     a.join(b, col("a_pos") === col("b_pos") && col("a_id") =!= col("b_id"))
       .select(col("a_pos").as("pos"), col("a_id").as("id"), col("b_id").as("nid"),
         sqrt(dist2("a_", "b_")).as("d"))
   }
+
+  /** Packed-broadcast ceiling for [[knnRef]] (ADVICE r13): the packed
+    * table is |positions| rows of ≤ maxRef·9 doubles (~720 KB/row at
+    * maxRef=10000) — sized for the patch-bank geometry, but a caller
+    * whose position count grows could silently exceed executor/driver
+    * broadcast limits. One cheap per-position count bounds the exact
+    * packed payload up front; past the ceiling knnRef falls back
+    * (loudly) to the bit-identical pairwise+window-trim plan.
+    */
+  private[graft] val KnnBroadcastMaxBytes: Long = 1L << 30
 
   /** The k-trimmed neighbour stream (pos, id, nid, d) via the PACKED
     * graft_knn kernel: each position's capped reference set packs into
@@ -205,27 +227,12 @@ object Detect {
     * — but the n·maxRef pair rows never exist: at sf1 this removed a
     * 26M-row shuffle + window sort that was 60% of q11's wall time.
     */
-  /** Packed-broadcast ceiling for [[knnRef]] (ADVICE r13): the packed
-    * table is |positions| rows of ≤ maxRef·9 doubles (~720 KB/row at
-    * maxRef=10000) — sized for the patch-bank geometry, but a caller
-    * whose position count grows could silently exceed executor/driver
-    * broadcast limits. One cheap per-position count bounds the exact
-    * packed payload up front; past the ceiling knnRef falls back
-    * (loudly) to the bit-identical pairwise+window-trim plan.
-    */
-  private[graft] val KnnBroadcastMaxBytes: Long = 1L << 30
-
   private[graft] def knnRef(spark: SparkSession, bank: DataFrame, maxRef: Int,
                             k: Int, eps: Double,
                             maxBroadcastBytes: Long = KnnBroadcastMaxBytes): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    val pid = concat_ws("#", col("series"), col("win"))
-    val withId = bank.withColumn("id", pid)
-    // exact packed payload: Σ_pos min(|pos|, maxRef) features × 9 × 8 B
-    // (a |positions|-row partial agg — trivial next to the scan itself)
-    val estBytes = withId.groupBy("pos").agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum(least(col("c"), lit(maxRef.toLong))), lit(0L)))
-      .first().getLong(0) * FeatCols.length * 8L
+    val withId = bank.withColumn("id", patchId)
+    val (estBytes, over) = rosterGuards(withId, maxRef)
     if (estBytes > maxBroadcastBytes) {
       System.err.println(s"[detect] knnRef packed table ~$estBytes B exceeds " +
         s"$maxBroadcastBytes B — falling back to the pairwise+trim plan")
@@ -235,7 +242,7 @@ object Detect {
         .withColumn("rn", row_number().over(trimW)).filter(col("rn") <= k)
         .select("pos", "id", "nid", "d")
     }
-    val packed = cappedRef(withId, maxRef)
+    val packed = cappedRef(withId, maxRef, over)
       .select(col("pos"),
         struct(col("id"), array(FeatCols.map(col): _*).as("fs")).as("s"))
       .groupBy("pos").agg(array_sort(collect_list(col("s"))).as("ps"))
@@ -271,51 +278,80 @@ object Detect {
   def nearestDistWeightExact(spark: SparkSession, sfDir: String): DataFrame =
     nearestDistWeight(spark, sfDir, maxRef = Int.MaxValue)
 
-  /** q23: end-to-end SoftPatch pipeline (ref softpatch.py fit + predict):
-    * nearest-dist patch weights (+1) on the bank → denoise (drop the top
-    * `denoiseThr` weight quantile) → score test patches against the kept
-    * bank → soft re-weight by the matched bank patch's weight → window
-    * score = max → flag windows above the (1−contam) score quantile.
-    * The kept bank stays broadcast; ties on distance break by bank id.
+  /** SoftPatch step 1 — the denoised kept bank (id, pos, wgt, f0..f8):
+    * bank patches whose weight `wgt` = nearest-dist weight + 1 is at or
+    * below the (1 − denoiseThr) weight quantile, a plan literal from
+    * the distributed range-sort (util.Quantiles).
     */
-  def pipeline(spark: SparkSession, sfDir: String,
-               denoiseThr: Double = 0.15, contamRate: Double = 0.1): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val (bank, test) = TsCore.bankAndTest(spark, sfDir)
+  private[graft] def denoisedBank(spark: SparkSession, sfDir: String,
+                                  denoiseThr: Double): DataFrame = {
+    val (bank, _) = TsCore.bankAndTest(spark, sfDir)
     val w = nearestDistWeight(spark, sfDir).withColumn("wgt", col("w_nearest") + 1.0)
-    // denoise threshold via the distributed range-sort (util.Quantiles),
-    // embedded as a plan literal — at billions of bank patches the old
-    // single-group percentile() buffer was the one non-distributed step
     val thrW = graft.util.Quantiles.exactLit(w, "wgt", 1.0 - denoiseThr)
-    val bid = bank.withColumn("id", concat_ws("#", col("series"), col("win")))
-    val kept = bid.join(w.select("id", "pos", "wgt"), Seq("id", "pos"))
+    bank.withColumn("id", patchId)
+      .join(w.select("id", "pos", "wgt"), Seq("id", "pos"))
       .filter(col("wgt") <= thrW)
-    // Kept bank broadcasts as ONE row: features flattened sorted by
-    // (id, pos) + the parallel weight array. graft_argmin_dist2 keeps
-    // the FIRST index on exact distance ties, so the sorted packing
-    // reproduces the oracle's `ORDER BY d, id` nearest-patch choice.
-    val packed = kept
-      .select(struct(col("id"), col("pos"), col("wgt"),
+      .select((Seq("id", "pos", "wgt") ++ FeatCols).map(col): _*)
+  }
+
+  /** SoftPatch step 2 — a kept bank packed into ONE broadcastable row:
+    * features `bf` flattened sorted by (id, pos) plus the parallel
+    * weight array `ws`. graft_argmin_dist2 keeps the FIRST index on
+    * exact distance ties, so the sorted packing reproduces the oracle's
+    * `ORDER BY d, id` nearest-patch choice.
+    */
+  private[graft] def packBank(kept: DataFrame): DataFrame =
+    kept.select(struct(col("id"), col("pos"), col("wgt"),
         array(FeatCols.map(col): _*).as("fs")).as("s"))
       .agg(array_sort(collect_list(col("s"))).as("ps"))
       .select(flatten(expr("transform(ps, x -> x.fs)")).as("bf"),
               expr("transform(ps, x -> x.wgt)").as("ws"))
-    val pscores = test
-      .select(col("series"), col("win"), col("pos"), array(FeatCols.map(col): _*).as("p"))
+
+  /** SoftPatch step 3 — `keys` + `pscore` per patch row: sqrt(min d²)
+    * to the packed bank × the matched bank patch's weight, by the
+    * codegen graft_min_dist2 / graft_argmin_dist2 scan over the one
+    * broadcast bank row — the scored side never widens or shuffles.
+    */
+  private[graft] def patchScores(patches: DataFrame, packed: DataFrame,
+                                 keys: Seq[String]): DataFrame = {
+    graft.functions.VectorExprs.register(patches.sparkSession)
+    patches.select((keys.map(col) :+ array(FeatCols.map(col): _*).as("p")): _*)
       .crossJoin(broadcast(packed))
       .withColumn("idx", expr("graft_argmin_dist2(bf, p)"))
-      .select(col("series"), col("win"),
-        (sqrt(expr("graft_min_dist2(bf, p)")) *
-          expr("ws[int(idx)]")).as("pscore"))
-    // window scores materialize once (the threshold pass and the final
-    // select would otherwise each recompute the broadcast-kernel scan)
+      .select((keys.map(col) :+
+        (sqrt(expr("graft_min_dist2(bf, p)")) * expr("ws[int(idx)]")).as("pscore")): _*)
+  }
+
+  /** SoftPatch step 4 — the window flag over (series, win, raw score):
+    * r4(score) and `pred` = raw score > `thr`.
+    */
+  private[graft] def flagWindows(winScores: DataFrame, thr: Column): DataFrame =
+    winScores.select(col("series"), col("win"), Num.r4(col("score")).as("score"),
+      when(col("score") > thr, 1).otherwise(0).as("pred"))
+
+  /** The SoftPatch fit (ref softpatch.py fit + predict): raw window
+    * scores (max patch score per (series, win)) of the test split
+    * against the denoised bank, materialized once, and the
+    * contamination cut q23 flags with — their (1 − contamRate)
+    * quantile, None on an empty split.
+    */
+  private[graft] def fit(spark: SparkSession, sfDir: String, denoiseThr: Double,
+                         contamRate: Double): (DataFrame, Option[Double]) = {
     val winScores = TsCore.cached(spark, sfDir, s"q23ws_$denoiseThr") {
-      pscores.groupBy("series", "win").agg(max("pscore").as("score"))
+      val (_, test) = TsCore.bankAndTest(spark, sfDir)
+      patchScores(test, packBank(denoisedBank(spark, sfDir, denoiseThr)), Seq("series", "win"))
+        .groupBy("series", "win").agg(max("pscore").as("score"))
     }
-    val thrS = graft.util.Quantiles.exactLit(winScores, "score", 1.0 - contamRate)
-    winScores
-      .select(col("series"), col("win"), Num.r4(col("score")).as("score"),
-        when(col("score") > thrS, 1).otherwise(0).as("pred"))
+    (winScores, graft.util.Quantiles.exactOne(winScores, "score", 1.0 - contamRate))
+  }
+
+  /** q23: end-to-end SoftPatch pipeline — [[fit]], then each window
+    * flagged against its contamination cut.
+    */
+  def pipeline(spark: SparkSession, sfDir: String,
+               denoiseThr: Double = 0.15, contamRate: Double = 0.1): DataFrame = {
+    val (winScores, thr) = fit(spark, sfDir, denoiseThr, contamRate)
+    flagWindows(winScores, graft.util.Quantiles.litOf(thr))
   }
 
   /** Local Outlier Factor (k=6) per patch position over the bank

@@ -49,24 +49,20 @@ object MllibForecast {
     // Concurrent driver loop: each per-series fit is an independent set
     // of Spark jobs over the checkpointed base — running them in
     // parallel overlaps their scheduling + aggregation latency (the
-    // normal-solver fit is 2-3 small jobs each).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val rows = mlSeries.map { s =>
-      Future {
-        val train = assembler.transform(base.filter(col("series") === s && col("t") < col("tsplit")))
-        val test = assembler.transform(base.filter(col("series") === s && col("t") >= col("tsplit")))
-        val model = lr.fit(train)
-        val pred = model.transform(test)
-        val err = pred.agg(
-          avg(abs(col("y") - col("prediction"))).as("mae"),
-          sqrt(avg((col("y") - col("prediction")) * (col("y") - col("prediction")))).as("rmse"))
-          .head()
-        (s, model.intercept, model.coefficients(0), model.coefficients(1), model.coefficients(2),
-          err.getDouble(0), err.getDouble(1))
-      }
-    }.map(Await.result(_, Duration.Inf))
+    // normal-solver fit is 2-3 small jobs each). util.Overlap tags them
+    // with one cancellable job group on a session-bounded pool.
+    val rows = graft.util.Overlap.all(spark, "q26")(mlSeries.toSeq.map { s => () =>
+      val train = assembler.transform(base.filter(col("series") === s && col("t") < col("tsplit")))
+      val test = assembler.transform(base.filter(col("series") === s && col("t") >= col("tsplit")))
+      val model = lr.fit(train)
+      val pred = model.transform(test)
+      val err = pred.agg(
+        avg(abs(col("y") - col("prediction"))).as("mae"),
+        sqrt(avg((col("y") - col("prediction")) * (col("y") - col("prediction")))).as("rmse"))
+        .head()
+      (s, model.intercept, model.coefficients(0), model.coefficients(1), model.coefficients(2),
+        err.getDouble(0), err.getDouble(1))
+    })
     val mlDf = rows.toSeq.toDF("series", "b0", "b1", "b2", "b3", "mae", "rmse")
     val all =
       if (!hasOverflow) mlDf

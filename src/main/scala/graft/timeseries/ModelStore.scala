@@ -14,56 +14,33 @@ import graft.util.Num
   */
 object ModelStore {
 
-  /** Fit on the train split and persist all scoring artifacts. Both
-    * quantile artifacts (denoise cut, score threshold) come from the
-    * distributed range-sort (util.Quantiles) — nothing funnels the
-    * bank or the score stream into a one-reducer percentile buffer.
+  /** Fit on the train split and persist all scoring artifacts: the
+    * denoised kept bank, the scaling bounds and the fit's own
+    * contamination cut — the threshold q23 flags with. Both cuts come
+    * from the distributed range-sort (util.Quantiles).
     */
   def save(spark: SparkSession, sfDir: String, path: String,
            denoiseThr: Double = 0.15, contamRate: Double = 0.1): Unit = {
     import spark.implicits._
-    val (bank, _) = TsCore.bankAndTest(spark, sfDir)
-    val w = Detect.nearestDistWeight(spark, sfDir).withColumn("wgt", col("w_nearest") + 1.0)
-    val thrW = graft.util.Quantiles.exactLit(w, "wgt", 1.0 - denoiseThr)
-    val kept = bank.withColumn("id", concat_ws("#", col("series"), col("win")))
-      .join(w.select("id", "pos", "wgt"), Seq("id", "pos"))
-      .filter(col("wgt") <= thrW)
-      .select((Seq("id", "pos", "wgt").map(col) ++ Detect.FeatCols.map(col)): _*)
-    kept.write.mode("overwrite").parquet(s"$path/bank")
+    Detect.denoisedBank(spark, sfDir, denoiseThr).write.mode("overwrite").parquet(s"$path/bank")
     TsCore.scaleBounds(spark, sfDir).write.mode("overwrite").parquet(s"$path/bounds")
-    val scores = Detect.pipeline(spark, sfDir, denoiseThr, contamRate)
-    Seq(graft.util.Quantiles.exactOne(scores, "score", 1.0 - contamRate))
+    Seq(Detect.fit(spark, sfDir, denoiseThr, contamRate)._2)
       .toDF("threshold").write.mode("overwrite").parquet(s"$path/threshold")
   }
 
-  /** Reload artifacts and score the given patch table (same f0..f8
-    * schema) against the saved bank — no refit. The bank broadcasts as
-    * ONE packed row (features flattened sorted by (id, pos) + the
-    * parallel weight array) and each probe patch runs the codegen
-    * graft_min_dist2 / graft_argmin_dist2 scan — the same shape as
-    * Detect.pipeline, NOT a |patches|×|bank|-row join: the scored side
-    * never widens or shuffles before its (series, win) reduce.
-    * graft_argmin_dist2 keeps the FIRST index on exact distance ties,
-    * so the (id, pos)-sorted packing reproduces the pipeline's
-    * `ORDER BY d, id` nearest-patch choice.
-    */
-  /** The saved bank packed into ONE broadcastable row: features
-    * flattened sorted by (id, pos) plus the parallel weight array —
-    * the input shape of the codegen scan kernels. Shared by the batch
-    * scorer below and the streaming scorer
-    * (streaming.ScoreStream.bankScoreStream).
+  /** The saved bank as ONE broadcastable row (Detect.packBank) — shared
+    * by [[loadAndScore]] and streaming.ScoreStream.bankScoreStream.
     */
   def packedBank(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/bank")
-      .select(struct(col("id"), col("pos"), col("wgt"),
-        array(Detect.FeatCols.map(col): _*).as("fs")).as("s"))
-      .agg(array_sort(collect_list(col("s"))).as("ps"))
-      .select(flatten(expr("transform(ps, x -> x.fs)")).as("bf"),
-              expr("transform(ps, x -> x.wgt)").as("ws"))
+    Detect.packBank(spark.read.parquet(s"$path/bank"))
 
   /** The saved score threshold (single row, column `threshold`). */
   def threshold(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/threshold")
+
+  /** Raw window scores flagged against the saved threshold. */
+  private[graft] def flagSaved(spark: SparkSession, path: String, winScores: DataFrame): DataFrame =
+    Detect.flagWindows(winScores.crossJoin(broadcast(threshold(spark, path))), col("threshold"))
 
   /** Forecast-model persistence — the forecasting half of the reference's
     * save/load lifecycle (forecasting wrappers checkpoint their trained
@@ -144,14 +121,6 @@ object ModelStore {
           .otherwise(0))
       .drop("n_cal", "qhatq")
 
-  /** SQ8 vector-index persistence — the ANN-family lifecycle: quantize
-    * the collection in batch (qv11's per-dim uint8 grid), persist grid
-    * params (one row) + codes (one byte/dim/vector — the compressed
-    * collection), and serve top-k lookups against the reconstruction,
-    * bit-identical to the in-session quantizer (sq8ReconFrom shares
-    * the exact grid arithmetic). The packed one-row form
-    * [[sq8Packed]] is what the streaming scorer broadcasts.
-    */
   /** BM25 lexical-index persistence — qv18's postings with their
     * denormalized corpus stats, the artifact bm25ScoreStream serves
     * from. At 100 TB this table is tok-bucketed so the serving join
@@ -186,6 +155,14 @@ object ModelStore {
   def bpeMergeRules(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/bpe_merges")
 
+  /** SQ8 vector-index persistence — the ANN-family lifecycle: quantize
+    * the collection in batch (qv11's per-dim uint8 grid), persist grid
+    * params (one row) + codes (one byte/dim/vector — the compressed
+    * collection), and serve top-k lookups against the reconstruction,
+    * bit-identical to the in-session quantizer (sq8ReconFrom shares
+    * the exact grid arithmetic). The packed one-row form
+    * [[sq8Packed]] is what the streaming scorer broadcasts.
+    */
   def saveSq8Index(spark: SparkSession, sfDir: String, path: String): Unit = {
     val (params, codes) = graft.vector.Similarity.sq8IndexFrames(spark, sfDir)
     params.write.mode("overwrite").parquet(s"$path/sq8params")
@@ -459,19 +436,13 @@ object ModelStore {
       .withColumn("p_refit", Forecast.refitPred("cutB"))
       .drop(Seq("cutA", "cutB").flatMap(c => (0 to 3).map(i => s"b${i}_$c")): _*)
 
-  def loadAndScore(spark: SparkSession, path: String, patches: DataFrame): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val packed = packedBank(spark, path)
-    val thr = threshold(spark, path)
-    patches
-      .select(col("series"), col("win"), col("pos"), array(Detect.FeatCols.map(col): _*).as("p"))
-      .crossJoin(broadcast(packed))
-      .withColumn("idx", expr("graft_argmin_dist2(bf, p)"))
-      .select(col("series"), col("win"),
-        (sqrt(expr("graft_min_dist2(bf, p)")) * expr("ws[int(idx)]")).as("pscore"))
-      .groupBy("series", "win").agg(max("pscore").as("score"))
-      .crossJoin(broadcast(thr))
-      .select(col("series"), col("win"), Num.r4(col("score")).as("score"),
-        when(col("score") > col("threshold"), 1).otherwise(0).as("pred"))
-  }
+  /** Reload artifacts and score the given patch table (same f0..f8
+    * schema) against the saved bank — no refit: Detect.pipeline's
+    * patch score, window max and flag, so scores and flags equal q23's
+    * on the same patches.
+    */
+  def loadAndScore(spark: SparkSession, path: String, patches: DataFrame): DataFrame =
+    flagSaved(spark, path,
+      Detect.patchScores(patches, packedBank(spark, path), Seq("series", "win"))
+        .groupBy("series", "win").agg(max("pscore").as("score")))
 }

@@ -149,12 +149,6 @@ object TsCore {
   def lcgScalar(key: Long, salt: Int): Double =
     ((LcgA * (key * 1000 + salt) + LcgC) % LcgM).toDouble / LcgM
 
-  /** Injection parameters per (series, win) — re-expression of
-    * synth_anomaly.py SynthLoadAnomaly.inject_anomaly with LCG draws:
-    * contaminate 40% of windows; type ~ (.3,.3,.2,.2); positions/lengths
-    * per reference's randint ranges for n=24; softstart/extreme 50/50;
-    * r ~ U(0.01, 3.99).
-    */
   /** Per-(series, win) deterministic LCG key (sidx·100 + win) — the
     * draw base shared by the anomaly injector (q05) and the masked-pair
     * builder (q44); the oracle's `keys` CTE mirrors it.
@@ -175,6 +169,12 @@ object TsCore {
       .select(col("series"), col("win"), (col("sidx") * 100L + col("win")).as("key"))
   }
 
+  /** Injection parameters per (series, win) — re-expression of
+    * synth_anomaly.py SynthLoadAnomaly.inject_anomaly with LCG draws:
+    * contaminate 40% of windows; type ~ (.3,.3,.2,.2); positions/lengths
+    * per reference's randint ranges for n=24; softstart/extreme 50/50;
+    * r ~ U(0.01, 3.99).
+    */
   def injectParams(spark: SparkSession, sfDir: String): DataFrame = {
     // not checkpointed: single consumer (injected)
     val wins = winKeys(spark, sfDir)

@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSession
   * left the sibling Spark jobs running detached, and blocking Spark
   * actions on the shared global pool risked starvation if the paths
   * ever nest (ADVICE r18). This helper fixes both: each call runs its
-  * tasks on a DEDICATED bounded pool (one thread per task — the task
-  * count at every call site is a small constant), every task's jobs are
+  * tasks on a DEDICATED pool of min(tasks, defaultParallelism) threads
+  * (q26 overlaps up to 64 per-series fits; more threads than cores
+  * only queue in the scheduler), every task's jobs are
   * tagged with one cancellable job group, and the first failure cancels
   * the whole group before rethrowing — no detached jobs survive the
   * call. FIFO scheduling still gives the back-fill behaviour the
@@ -24,7 +25,8 @@ object Overlap {
     if (tasks.sizeIs <= 1) return tasks.map(_())
     val sc = spark.sparkContext
     val gid = s"overlap-$desc-${seq.incrementAndGet()}"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(tasks.size, sc.defaultParallelism))
     try {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration

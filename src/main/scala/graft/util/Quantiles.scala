@@ -24,8 +24,9 @@ object Quantiles {
   /** Memo of computed quantiles, keyed by (session, canonicalized
     * logical plan of the input, column). The detection family asks for
     * the SAME thresholds over the SAME cached stages repeatedly (the
-    * denoise cut in Detect.pipeline / ModelStore.save / Coreset.keptBank,
-    * the contamination cut in q16/q23) — each recomputation is a full
+    * denoise cut in Detect.denoisedBank, which q13, q23 and
+    * ModelStore.save all build on; the contamination cut in q16 and
+    * Detect.fit) — each recomputation is a full
     * range-sort job chain. Entries are a handful of doubles; stopped
     * sessions are swept like util.StageCache.
     */
@@ -120,5 +121,9 @@ object Quantiles {
     * the threshold becomes a plan literal instead of a single-reducer agg.
     */
   def exactLit(df: DataFrame, c: String, q: Double): Column =
-    exactOne(df, c, q).map(lit).getOrElse(lit(null).cast("double"))
+    litOf(exactOne(df, c, q))
+
+  /** A computed quantile as a literal Column (null when None). */
+  def litOf(v: Option[Double]): Column =
+    v.map(lit).getOrElse(lit(null).cast("double"))
 }

@@ -27,6 +27,16 @@ class ContractSpec extends AnyFunSuite {
       "a query lost (or gained) its oracle without the declaration moving")
   }
 
+  test("README's registered and oracle-checked counts match the registry") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8").replaceAll("\\s+", " ")
+    def count(re: String): Int = re.r.findFirstMatchIn(readme).map(_.group(1).toInt)
+      .getOrElse(fail(s"README lost the count matching /$re/"))
+    assert(count("""\((\d+) registered\)""") === SparkEntry.queries.size)
+    assert(count("""DuckDB-equivalent for (\d+) of""") === SparkEntry.oracleSql.size)
+    assert(count("""all (\d+) pass at""") === SparkEntry.oracleSql.size)
+  }
+
   test("query keys follow the short-prefix naming the bench JSON relies on") {
     // Bench truncates each name at the first '_' AND drops the uniform
     // leading 'q' for the driver's 2000-byte output window; the q-less

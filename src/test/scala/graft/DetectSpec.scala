@@ -95,6 +95,17 @@ class DetectSpec extends SparkSuite {
       "guard fallback diverged from the packed kernel")
   }
 
+  test("knnRef bank guards: one eager action before the kernel plan") {
+    // the packed-byte estimate and the cappedRef truncation guard read
+    // the same per-position counts — one aggregate, not two jobs
+    val (bank, _) = TsCore.bankAndTest(spark, Sf01)
+    bank.count() // materialize the cached bank outside the probe
+    val jobs = jobsStartedBy(Detect.knnRef(spark, bank, maxRef = 10000, k = 1, eps = 0.0))
+    val actions = jobs.map(_.properties.getProperty("spark.sql.execution.root.id")).distinct
+    assert(jobs.nonEmpty, "the guards ran no job")
+    assert(actions.size === 1, s"expected one guard action, got ${actions.size} over ${jobs.size} job(s)")
+  }
+
   test("graft_knn planted exact ties: equal distances break on UTF8 nid order") {
     import spark.implicits._
     // five candidates, four at IDENTICAL distance from the probe (same

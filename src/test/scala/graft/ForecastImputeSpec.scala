@@ -391,6 +391,20 @@ class ForecastImputeSpec extends SparkSuite {
     }
   }
 
+  test("q26 per-series fits run under one overlap-q26 job group") {
+    // setup jobs run on the caller's thread (its group); every fit job
+    // must carry util.Overlap's cancellable group
+    val sc = spark.sparkContext
+    sc.setJobGroup("q26-caller", "q26 caller")
+    val jobs = try jobsStartedBy(MllibForecast.mllibForecast(spark, Sf01))
+               finally sc.clearJobGroup()
+    val groups = jobs.map(j => String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    val fitGroups = groups.filter(_ != "q26-caller")
+    assert(fitGroups.size >= 5, s"expected a job per fit (5 series): ${groups.distinct}")
+    assert(fitGroups.distinct.size === 1 && fitGroups.head.startsWith("overlap-q26-"),
+      s"fit jobs outside one overlap-q26 group: ${fitGroups.distinct}")
+  }
+
   test("mllib forecast overflow path (cap < series count) matches the full result") {
     // cap of 2 forces 3 of the 5 series through the grouped olsSolve path;
     // coefficients must agree with the all-MLlib result (same normal equations)

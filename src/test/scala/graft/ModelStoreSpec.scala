@@ -26,6 +26,22 @@ class ModelStoreSpec extends SparkSuite {
     assert(!p.contains("row_number"), "pairwise-join rank shape crept back")
   }
 
+  test("saved threshold is the fit's own contamination cut; pred = raw score > threshold") {
+    val path = Files.createTempDirectory("graft-model-thr").toString
+    ModelStore.save(spark, Sf01, path)
+    val saved = ModelStore.threshold(spark, path).head().getDouble(0)
+    val (winScores, cut) = Detect.fit(spark, Sf01, 0.15, 0.1)
+    assert(cut.isDefined)
+    assert(java.lang.Double.doubleToLongBits(saved) === java.lang.Double.doubleToLongBits(cut.get),
+      s"saved threshold $saved is not the fit's cut ${cut.get}")
+    val (_, test) = TsCore.bankAndTest(spark, Sf01)
+    val j = ModelStore.loadAndScore(spark, path, test)
+      .join(winScores.withColumnRenamed("score", "raw"), Seq("series", "win"))
+    assert(j.count() === winScores.count())
+    assert(j.filter(col("pred") =!= when(col("raw") > saved, 1).otherwise(0)).count() === 0,
+      "pred must be raw score > saved threshold")
+  }
+
   test("forecast model save/load reproduces in-session predictions bit-for-bit") {
     import graft.timeseries.Forecast
     val path = Files.createTempDirectory("graft-fc").toString
